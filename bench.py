@@ -273,10 +273,10 @@ def main() -> None:
     loads: dict[str, list] = {}
     load_start = os.getloadavg()[0]
 
-    # Headline = the production job's default mode (fused: the whole
-    # pipeline in one Arrow stage, jobs/extract.py --mode fused). The
-    # array mode (stage-1 UDF + native array exprs) is timed alongside
-    # for the composable path's regression signal.
+    # Headline = the production path (extract_fused: the whole pipeline
+    # in one Arrow stage, what jobs/extract.py runs). The array mode
+    # (stage-1 UDF + native array exprs, the independent cross-check) is
+    # timed alongside as its regression signal.
     _run(lambda: extract_fused(parted))
     meter.start()
     t = adaptive_min(lambda: extract_fused(parted))

@@ -211,15 +211,20 @@ _CHARSET_CODECS = {
 }
 
 
-def decode_page(html: bytes, cfg: PipelineConfig = DEFAULT) -> str:
+def decode_page(html: bytes | None, cfg: PipelineConfig = DEFAULT) -> str:
     """bytes -> str at the page boundary. Default: utf-8 with
-    errors='replace' (never a crash on crawl garbage). With
+    errors='replace' (never a crash on crawl garbage). A NULL payload
+    (``html`` is nullable in the pages schema) is an empty page: text
+    "", 0 blocks, the row kept — the one rule every caller (oracle,
+    both Spark paths, serving) inherits. With
     ``cfg.charset_sniff``, a `charset=` declaration of the Latin-1
     family inside the first 1024 bytes switches the codec — the
     check_and_read/img_decode format-dispatch role (ppocr/utils/
     utility.py:108-140) applied to text encodings. utf-8/unknown/no
     declaration keep the default path, so UTF-8 corpora are
     byte-identical with the flag on or off."""
+    if html is None:
+        return ""
     if cfg.charset_sniff:
         m = _CHARSET_RE.search(html[:1024])
         if m:
@@ -231,7 +236,7 @@ def decode_page(html: bytes, cfg: PipelineConfig = DEFAULT) -> str:
     return html.decode("utf-8", errors="replace")
 
 
-def tokenize_page(html: bytes, cfg: PipelineConfig = DEFAULT) -> list[Block]:
+def tokenize_page(html: bytes | None, cfg: PipelineConfig = DEFAULT) -> list[Block]:
     """Parse one page into reading-ordered candidate blocks."""
     doc = prefilter_doc(decode_page(html, cfg), cfg)
     out: list[Block] = []

@@ -54,9 +54,11 @@ def make_detect_blocks_udf(cfg: PipelineConfig = DEFAULT):
     def _detect(html: pd.Series) -> pd.Series:
         # blk.__dict__, not dataclasses.asdict: asdict deep-copies every
         # field and measured ~1.7x slower end-to-end on the UDF stage;
-        # the instance dict has exactly the declared fields.
+        # the instance dict has exactly the declared fields. Arrow hands
+        # binary cells over as bytes, NULL as None (an empty page, see
+        # core.tokenizer.decode_page).
         return html.map(
-            lambda b: [blk.__dict__ for blk in tokenize_page(bytes(b), cfg)]
+            lambda b: [blk.__dict__ for blk in tokenize_page(b, cfg)]
         )
 
     return F.pandas_udf(_detect, BLOCKS_TYPE)

@@ -1,20 +1,19 @@
 """The extraction plan: detect -> filter -> CTC-collapse -> assemble.
 
-Two independent Spark realizations of the exact same semantics (both
-byte-identical to the pure-Python oracle, core/oracle.py — the pytest
-gate asserts all three agree):
+Two Spark realizations of the exact same semantics, both byte-identical
+to the pure-Python oracle (core/oracle.py; the pytest golden gate
+asserts it):
 
-- ``extract`` (array mode, the production path): after the stage-1 UDF,
-  EVERYTHING is per-row higher-order functions on the blocks array —
-  zero shuffles, embarrassingly parallel, the right shape for a
-  1000-executor cluster over 10^12 rows. The whole post-UDF plan is one
-  whole-stage-codegen projection.
+- ``extract_fused`` (the production path, used by the batch job, the
+  sync job and the streaming extractors): the whole per-page pipeline
+  in ONE Arrow-batched mapInPandas stage running the oracle itself.
 
-- ``extract_relational`` (cross-check path): explode -> native filters
-  -> window (lag/run-id, the reference's adjacency dedup as a window,
-  SURVEY.md §2.5 rows-frame note) -> groupBy. Costs shuffles; exists to
-  cross-validate the array path and to demonstrate the relational
-  formulation of each operator.
+- ``extract`` (array mode, the independent Spark-native cross-check and
+  the blocks-level API): after the stage-1 UDF, EVERYTHING is per-row
+  higher-order functions on the blocks array — zero shuffles, one
+  whole-stage-codegen projection. It shares only the tokenizer with the
+  oracle, so it checks the scoring, filtering, CTC collapse and
+  assembly independently.
 
 Reference semantics sites are cited in core/oracle.py's docstring; the
 expression-level parity rules (IEEE double arithmetic on integer inputs,
@@ -23,7 +22,7 @@ identical operation order for means) are what make byte-identity hold.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from paddleocr_spark.config import DEFAULT, LATIN_RUN_CLASS, PipelineConfig
@@ -195,7 +194,7 @@ def _dets_col(cfg: PipelineConfig) -> Column:
 
 
 def extract(df: DataFrame, cfg: PipelineConfig = DEFAULT) -> DataFrame:
-    """Production path: zero-shuffle, per-row higher-order functions."""
+    """Array mode: zero-shuffle, per-row higher-order functions."""
     d = scored_blocks(df, cfg)
     d = d.withColumn("n_blocks_detected", F.size("blocks"))
     d = d.withColumn("dets", _dets_col(cfg))
@@ -211,7 +210,7 @@ FUSED_SCHEMA = (
 
 
 def extract_fused(df: DataFrame, cfg: PipelineConfig = DEFAULT) -> DataFrame:
-    """Throughput path: the whole per-page pipeline fused into ONE
+    """Production path: the whole per-page pipeline fused into ONE
     Arrow-batched mapInPandas stage (core.oracle.extract_page — the same
     pure function the pytest golden gate certifies byte-identical to the
     array plan), emitting final columns directly.
@@ -219,19 +218,18 @@ def extract_fused(df: DataFrame, cfg: PipelineConfig = DEFAULT) -> DataFrame:
     This is the reference's own execution shape — the entire
     detect→cls→rec pipeline runs per-image inside one process
     (tools/infer/predict_system.py:76-158) — re-expressed as a single
-    vectorized UDF stage. vs `extract` (array mode) it trades the
-    composable blocks column for throughput: the Arrow boundary carries
-    final text + spans instead of every candidate block struct
+    vectorized UDF stage. vs `extract` (array mode) the Arrow boundary
+    carries final text + spans instead of every candidate block struct
     (~3-5x less transfer), and the post-UDF interpreted higher-order
     expressions (which measure ~1ms CPU/doc — 4x the tokenizer itself)
     disappear. Measured: 23.7k vs 16.3k docs/sec on 32 cores at sf0.1,
     and far flatter degradation under host contention (the work sits in
     the Python worker pool, not 32 JVM threads of HOF eval).
 
-    Use `extract` when downstream stages consume the blocks/scored
-    arrays relationally in the same job; use this when the job's output
-    IS the extraction (the 100 TB corpus pass). Both are byte-identical
-    per url (test_extract_e2e gate)."""
+    Runs unchanged under readStream (mapInPandas is stateless). Use
+    `extract` when downstream stages consume the blocks/scored arrays
+    relationally in the same job. Both are byte-identical per url
+    (test_extract_e2e gate)."""
     from paddleocr_spark.core.oracle import extract_page
 
     def run(batches):
@@ -239,7 +237,7 @@ def extract_fused(df: DataFrame, cfg: PipelineConfig = DEFAULT) -> DataFrame:
 
         for pdf in batches:
             rows = [
-                extract_page(u, bytes(h), l, cfg)
+                extract_page(u, h, l, cfg)
                 for u, h, l in zip(pdf["url"], pdf["html"], pdf["lang"])
             ]
             yield pd.DataFrame(
@@ -262,80 +260,3 @@ def extract_fused(df: DataFrame, cfg: PipelineConfig = DEFAULT) -> DataFrame:
     if cfg.sort_by_len:
         cols = cols.sortWithinPartitions(F.length("html"))
     return cols.mapInPandas(run, FUSED_SCHEMA)
-
-
-def extract_relational(df: DataFrame, cfg: PipelineConfig = DEFAULT) -> DataFrame:
-    """Cross-check path: explode -> filter -> window -> groupBy.
-
-    PRECONDITION: url is unique in ``df``. The windows and the final
-    rollup key on url, so duplicate input urls would interleave both
-    rows' blocks into one span stream and fan the merged result onto
-    every base row — unlike the array/fused paths, which process rows
-    independently. The production pipeline guarantees uniqueness (the
-    warehouse upsert / latest_crawl rule); apply ``latest_crawl``
-    first when feeding raw multi-capture crawls."""
-    d = scored_blocks(df, cfg)
-    base = d.select("url", "lang", F.size("blocks").alias("n_blocks_detected"))
-
-    e = d.select("url", F.explode("scored").alias("b")).select("url", "b.*")
-    e = e.filter(
-        (F.col("score") > F.lit(cfg.det_thresh))
-        & (F.col("score") >= F.lit(cfg.det_box_thresh))
-        & (F.col("text_len") > F.lit(cfg.min_text_len))
-    )
-    w = Window.partitionBy("url").orderBy("block_id")
-    e = e.withColumn("rn", F.row_number().over(w)).filter(
-        F.col("rn") <= cfg.max_candidates
-    )
-    prev_text = F.lag("text").over(w)
-    e = e.withColumn(
-        "new_run",
-        (prev_text.isNull() | (prev_text != F.col("text"))).cast("int"),
-    )
-    e = e.withColumn(
-        "span_id",
-        F.sum("new_run").over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow)),
-    )
-
-    g = e.groupBy("url", "span_id").agg(
-        F.sort_array(
-            F.collect_list(
-                F.struct("block_id", "start", "end", "score", "text", "parent_id")
-            )
-        ).alias("run")
-    )
-    run = F.col("run")
-    first = F.get(run, 0)
-    g = g.select(
-        "url",
-        F.struct(
-            first["block_id"].alias("block_id"),
-            first["start"].alias("start"),
-            F.aggregate(run, first["end"], lambda m, x: F.greatest(m, x["end"])).alias(
-                "end"
-            ),
-            (
-                F.aggregate(run, F.lit(0.0), lambda a, x: a + x["score"]) / F.size(run)
-            ).alias("score"),
-            first["text"].alias("text"),
-            first["parent_id"].alias("parent_id"),
-        ).alias("span"),
-    )
-    g = g.filter(
-        (F.col("span")["text"] != "") & (F.col("span")["score"] >= F.lit(cfg.drop_score))
-    )
-    per_url = g.groupBy("url").agg(
-        F.sort_array(F.collect_list("span")).alias("mspans")
-    )
-
-    joined = base.join(per_url, "url", "left").withColumn(
-        "mspans",
-        F.coalesce(
-            F.col("mspans"),
-            F.array().cast(
-                "array<struct<block_id:int,start:int,end:int,score:double,"
-                "text:string,parent_id:int>>"
-            ),
-        ),
-    )
-    return _assemble(joined, cfg)

@@ -36,11 +36,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from paddleocr_spark.config import DEFAULT, PipelineConfig
-from paddleocr_spark.operators.extract import (
-    extract,
-    extract_fused,
-    extract_relational,
-)
+from paddleocr_spark.operators.extract import extract_fused
 
 SALT_SEED = 42
 
@@ -137,7 +133,6 @@ def run_extract_job(
     spark: SparkSession,
     input_path: str,
     output_dir: str,
-    mode: str = "fused",
     n_partitions: int = 32,
     salt: int = 8,
     resume: bool = False,
@@ -216,8 +211,7 @@ def run_extract_job(
 
     pages = salted_repartition(pages, n_partitions, salt)
 
-    fn = {"array": extract, "fused": extract_fused, "relational": extract_relational}[mode]
-    ext = fn(pages, cfg)
+    ext = extract_fused(pages, cfg)
     # recompute from url post-extract: no extra shuffle, no UDF re-run
     ext = add_part_id(ext, n_partitions)
 
@@ -322,7 +316,6 @@ def run_extract_job(
         parts_processed=len(parts_processed),
         input_snapshot=snapshot,
         run_id=run_id,
-        mode=mode,
         timings=timings,
     )
     if wet_files is not None:

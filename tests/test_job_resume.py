@@ -106,38 +106,23 @@ def test_partition_balance_under_host_skew(spark, smoke_dir, tmp_path):
     assert min(counts) > 0 and max(counts) < 3 * (sum(counts) / len(counts))
 
 
-def test_relational_mode_job_identical_output(spark, smoke_dir, tmp_path):
-    """The --mode relational job (explode/filter/window/groupBy path)
-    writes a table identical to the array-mode job — the cross-check
-    the two extract() implementations promise, proven at the job
-    surface (partitioned write + lineage included)."""
-    inp = os.path.join(smoke_dir, "pages.parquet")
-    a_dir = str(tmp_path / "array_mode")
-    r_dir = str(tmp_path / "relational_mode")
-
-    a = run_extract_job(spark, inp, a_dir, mode="array", n_partitions=4, salt=2)
-    r = run_extract_job(spark, inp, r_dir, mode="relational", n_partitions=4, salt=2)
-    assert a["rows_out"] == r["rows_out"] > 0
-
-    ra = _read_sorted(spark, a_dir)
-    rr = _read_sorted(spark, r_dir)
-    assert [tuple(x) for x in ra] == [tuple(x) for x in rr]
-
-
 def test_fused_mode_job_identical_output(spark, smoke_dir, tmp_path):
-    """--mode fused (the default, single Arrow stage) writes a table
-    identical to the array-mode job at the job surface."""
+    """The job (the production fused stage behind a salted shuffle,
+    partitioned write and lineage) writes a table identical, on all five
+    output columns, to the independent array-mode extract() over the
+    same pages."""
+    from paddleocr_spark.operators.extract import extract
+
     inp = os.path.join(smoke_dir, "pages.parquet")
-    a_dir = str(tmp_path / "array_mode")
-    f_dir = str(tmp_path / "fused_mode")
+    out = str(tmp_path / "job")
+    stats = run_extract_job(spark, inp, out, n_partitions=4, salt=2)
 
-    a = run_extract_job(spark, inp, a_dir, mode="array", n_partitions=4, salt=2)
-    f = run_extract_job(spark, inp, f_dir, mode="fused", n_partitions=4, salt=2)
-    assert a["rows_out"] == f["rows_out"] > 0
-
-    ra = _read_sorted(spark, a_dir)
-    rf = _read_sorted(spark, f_dir)
-    assert [tuple(x) for x in ra] == [tuple(x) for x in rf]
+    cols = ["url", "extracted_text", "spans", "n_blocks_detected", "n_blocks_kept"]
+    job = spark.read.parquet(os.path.join(out, "extracted")).select(cols)
+    arr = extract(spark.read.parquet(inp)).select(cols)
+    assert stats["rows_out"] == job.count() == arr.count() > 0
+    assert job.exceptAll(arr).count() == 0
+    assert arr.exceptAll(job).count() == 0
 
 
 def test_blocklist_prunes_before_parsing(spark, smoke_dir, tmp_path):

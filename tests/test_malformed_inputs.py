@@ -9,7 +9,7 @@ import pytest
 
 from paddleocr_spark.core.oracle import extract_page
 from paddleocr_spark.core.tokenizer import tokenize_page
-from paddleocr_spark.operators.extract import extract
+from paddleocr_spark.operators.extract import extract, extract_fused
 
 CASES = [
     ("empty", b""),
@@ -22,6 +22,7 @@ CASES = [
     ("huge attr", b'<p data-bbox="1,2,3">bad bbox arity</p>'),
     ("only tags", b"<p></p><li></li><nav></nav>"),
     ("cr lf soup", b"<p>\r\n\r\n a \x0b b </p>"),
+    ("null html", None),
 ]
 
 
@@ -33,10 +34,15 @@ def test_oracle_never_crashes(name, payload):
     assert isinstance(r.extracted_text, str)
 
 
-def test_spark_matches_oracle_on_malformed(spark):
+@pytest.mark.parametrize("fn", [extract, extract_fused], ids=lambda f: f.__name__)
+def test_spark_matches_oracle_on_malformed(spark, fn):
     rows = [(f"u{i}", "en", p) for i, (_, p) in enumerate(CASES)]
     df = spark.createDataFrame(rows, "url string, lang string, html binary")
-    got = {r["url"]: r["extracted_text"] for r in extract(df).collect()}
+    got = {r["url"]: r for r in fn(df).collect()}
+    assert len(got) == len(CASES)
     for i, (_, p) in enumerate(CASES):
-        want = extract_page(f"u{i}", p, "en").extracted_text
-        assert got[f"u{i}"] == want, f"case {i} diverged"
+        want = extract_page(f"u{i}", p, "en")
+        r = got[f"u{i}"]
+        assert r["extracted_text"] == want.extracted_text, f"case {i} diverged"
+        assert r["n_blocks_detected"] == want.n_blocks_detected, f"case {i}"
+        assert r["n_blocks_kept"] == want.n_blocks_kept, f"case {i}"
